@@ -23,13 +23,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Soundness: keys carry (a) the owning SparkSession (plans are
   * session-bound), and (b) a caller-supplied STAMP naming the
-  * snapshot's identity — the layout uses its log head
-  * (version + commit ts + writer tag), the generation chains use the
-  * owning generation's manifest (mtime + length). Both change on any
-  * commit AND on a same-path scenario rebuild; within one stamp the
-  * underlying directories are immutable by construction (generation
-  * dirs publish by atomic rename; layout artifacts only ever change
-  * across commits). Bounded: LRU past [[maxEntries]] (round 18 — the
+  * identity of what the entry reads. The layout stamps composed plans
+  * with its log head and each resolved relation with the commit that
+  * wrote its artifact (version + commit ts + writer tag; see the
+  * layout's snapshot-cache notes), the generation chains use the
+  * owning generation's manifest (mtime + length). A stamp changes
+  * whenever its files do, and on a same-path scenario rebuild; within
+  * one stamp the underlying directories are immutable by construction
+  * (generation dirs publish by atomic rename; layout artifacts only
+  * ever change across the commits their stamps name). Bounded: LRU
+  * past [[maxEntries]] (round 18 — the
   * round-17 clear-all-at-512 made a long-lived session over many
   * tables×versions cyclically wipe and rebuild everything; access-order
   * eviction keeps the hot stamps and drops superseded ones first).

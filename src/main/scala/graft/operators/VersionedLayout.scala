@@ -117,35 +117,61 @@ object VersionedLayout {
   // list + schema) and the composed as-of/feed LOGICAL plan.
   //
   // Soundness: every cache key carries (a) the owning SparkSession (a
-  // plan is session-bound), and (b) the TABLE's log identity — head
-  // version + that entry's commit timestamp + writer tag. All layout
-  // mutations commit a log entry (data, evolution, maintenance,
-  // vacuum — commit-last protocol), so any change bumps the stamp and
-  // the next read rebuilds from fresh listings; a scenario dir purged
-  // and rebuilt at the same path gets a different (ts, tag) even at
-  // the same head. Within one committed state the underlying
-  // directories are immutable by construction (files are only ever
-  // replaced across commits), so a reused file list is exactly what a
-  // fresh listing would return. Bounded: cleared wholesale past 512
-  // entries (same discipline as ckptCache) — a cache wipe only costs
-  // the next build.
+  // plan is session-bound), and (b) the identity of what it reads — an
+  // entry's version + commit timestamp + writer tag, so a scenario dir
+  // purged and rebuilt at the same path never matches. Whole-plan keys
+  // (`asof|`, `feed|`) compose the log and carry the HEAD entry's.
+  // Resolved relations carry the ARTIFACT's, so a commit re-resolves
+  // only what it wrote:
+  //  - an insert segment or tombstone set: the entry that committed it
+  //    (plus its resolved path, live or fold-archived); a tombstone set
+  //    also carries the newest LATER vacuum, whose GC rewrites
+  //    tombstone dirs in place;
+  //  - the archive of compaction c: entry c (immutable until a vacuum
+  //    deletes it, and reads below the horizon fail);
+  //  - the live pid dirs: the newest entry that is not an insert,
+  //    upsert or delete (those write only under `_inserts/` and
+  //    `_tombs/`; every other action conservatively re-resolves them).
+  // Orphan sweeps delete only dirs no committed entry resolves to. So
+  // the files behind a key never change, and a reused file list is
+  // exactly what a fresh listing would return. Bounded: LRU past 512
+  // entries (SnapshotCache) — an eviction only costs the next build.
   // ------------------------------------------------------------------
-  /** The table's current log identity — the stamp every snapshot-cache
-    * key carries so any commit (or same-path rebuild) invalidates.
-    */
+  private def entryStamp(e: LogEntry): String = s"v${e.version}t${e.ts}g${e.tag}"
+
   private def logStamp(entries: Seq[LogEntry]): String =
-    entries.lastOption.map(e => s"v${e.version}t${e.ts}g${e.tag}").getOrElse("empty")
+    entries.lastOption.map(entryStamp).getOrElse("empty")
 
-  private def cachedPlan(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    SnapshotCache.plan(s, key)(build)
+  private def liveStamp(entries: Seq[LogEntry]): String =
+    entries.reverseIterator.find(e => !Set("insert", "upsert", "delete")(e.action))
+      .map(entryStamp).getOrElse("empty")
 
-  /** One resolved parquet relation per (session, table state, source
-    * paths) — the file listing and footer schema inference happen once
-    * per committed table state instead of once per plan build.
+  /** Insert segment `e` committed, wherever it lives now. `schema` (the
+    * writer's, right after the commit) skips footer inference.
     */
-  private def cachedParquet(s: SparkSession, stamp: String,
-      basePath: Option[String], paths: Seq[String]): DataFrame =
-    SnapshotCache.parquet(s, stamp, basePath, paths)
+  private def segmentRel(s: SparkSession, dir: String, entries: Seq[LogEntry],
+      e: LogEntry, schema: Option[StructType] = None): DataFrame =
+    SnapshotCache.parquet(s, entryStamp(e), None,
+      Seq(locateSegment(dir, entries, e.version)), schema)
+
+  /** Tombstone set `e` committed; see [[segmentRel]] for `schema`. */
+  private def tombRel(s: SparkSession, dir: String, entries: Seq[LogEntry],
+      e: LogEntry, schema: Option[StructType] = None): DataFrame = {
+    val gc = entries.reverseIterator
+      .find(x => x.action == "vacuum" && x.version > e.version)
+      .map(x => "|" + entryStamp(x)).getOrElse("")
+    SnapshotCache.parquet(s, entryStamp(e) + gc, None,
+      Seq(tombDir(dir, e.version, e.tag)), schema)
+  }
+
+  /** Resolve the artifacts commit `e` just wrote under their writers'
+    * schemas, so the next plan build reuses them without inference.
+    */
+  private def seedArtifacts(s: SparkSession, dir: String, e: LogEntry,
+      segment: Option[StructType], tombs: Option[StructType]): Unit = {
+    segment.foreach(sc => segmentRel(s, dir, Seq(e), e, Some(sc)))
+    tombs.foreach(sc => tombRel(s, dir, Seq(e), e, Some(sc)))
+  }
 
   private def metaFile(dir: String) = new java.io.File(logDir(dir), "meta.json")
 
@@ -294,21 +320,6 @@ object VersionedLayout {
   private def bloomHit(m: Int, bits: Array[Byte], h: Long): Boolean =
     bloomPositions(h, m).forall(p => (bits(p >>> 3) & (1 << (p & 7))) != 0)
 
-  /** Per-(column, pid) Bloom bitsets over `df` — one bounded
-    * distinct-count pass sizes each column's m, then ONE aggregate pass
-    * covers all declared spellings: bit positions are computed
-    * executor-side (codegen'd shift/mask off xxhash64) and OR-FOLDED
-    * executor-side into 64-bit words (`bit_or` over
-    * `1L << (pos % 64)`, grouped by (pid, column, pos / 64)) — the
-    * map-side-combined binary-OR aggregate, so what reaches the driver
-    * is EXACTLY the bitset mass, pids × columns × m/64 longs
-    * (≤ 4096 words = 32 KiB per (pid, column) at the m cap), never a
-    * data-proportional position set (round-15 advisor: the previous
-    * distinct-triples spelling was bounded by the same product but
-    * paid Row overhead per SET bit; the word fold is 64× fewer rows
-    * and its bound holds whatever the commit's distinct count does).
-    * Hot path stays pure codegen'd built-ins.
-    */
   /** The data type at `path` in `df` — a plain column, or a struct
     * field ARBITRARILY deep (`a.b.c...`, round 17; previously one
     * level); None when any step is absent or non-struct.
@@ -325,23 +336,21 @@ object VersionedLayout {
     }
   }
 
-  private def computeBlooms(
-      df: DataFrame, physCols: Seq[String]): Map[String, Map[Int, (Int, Array[Byte])]] = {
-    val typeOf: Map[String, org.apache.spark.sql.types.DataType] =
-      physCols.distinct.flatMap(c => resolveTypeOf(df, c).map(c -> _)).toMap
-    val present = physCols.distinct.filter(c =>
-      typeOf.get(c).exists(bloomableType))
-    if (present.isEmpty) return Map.empty
-    val dAggs = present.map(c => countDistinct(col(c)).as(s"__d_$c"))
-    val dRows = df.groupBy(col("pid").cast("int").as("p"))
-      .agg(dAggs.head, dAggs.tail: _*).collect()
-    val mOf: Map[String, Int] = present.map { c =>
-      val maxD = dRows.headOption.map(_.fieldIndex(s"__d_$c"))
-        .map(ix => dRows.map(_.getLong(ix)).max).getOrElse(0L)
-      var m = bloomMinBits
-      while (m < 16L * maxD && m < bloomMaxBits) m <<= 1
-      c -> m
-    }.toMap
+  /** Per-(column, pid) Bloom bitsets over `df` for the bloomable
+    * spellings `typeOf` names, each sized `mOf` bits — ONE aggregate
+    * pass: bit positions are computed executor-side (codegen'd
+    * shift/mask off xxhash64) and OR-FOLDED executor-side into 64-bit
+    * words (`bit_or` over `1L << (pos % 64)`, grouped by
+    * (pid, column, pos / 64)) — the map-side-combined binary-OR
+    * aggregate, so what reaches the driver is EXACTLY the bitset mass,
+    * pids × columns × m/64 longs (≤ 4096 words = 32 KiB per
+    * (pid, column) at the m cap), never a data-proportional position
+    * set. The sizing distinct counts come from [[commitMeta]]'s pass.
+    */
+  private def bloomWords(df: DataFrame,
+      typeOf: Map[String, org.apache.spark.sql.types.DataType],
+      mOf: Map[String, Int]): Map[String, Map[Int, (Int, Array[Byte])]] = {
+    val present = typeOf.keys.toSeq.sorted
     val words = df
       .select(col("pid").cast("int").as("p"),
         explode(array(present.map(c => struct(lit(c).as("c"),
@@ -470,89 +479,84 @@ object VersionedLayout {
       .flatMap(_.get(e.version)).getOrElse(Map.empty)
   }
 
-  /** Stats + Blooms for a commit whose landed bytes are `df`: computes
-    * [[statsOf]] and, when the layout declares Bloom columns, writes
-    * this commit's Bloom sidecar (every era spelling of every declared
-    * Bloom identity that `df` carries). The single recording hook every
-    * data-writing action calls before its commit.
+  /** A data commit's metadata: the rows it landed, the legacy
+    * primary-column triples and the physical-name-keyed stats map.
     */
-  private def recordStats(dir: String, ver: Int, tag: String,
-      df: DataFrame): (Seq[(Int, Long, Long)], Map[String, Seq[(Int, Long, Long)]]) = {
-    val declared = bloomColsOf(dir)
-    if (declared.nonEmpty) {
-      val entries = log(dir)
-      val head = entries.lastOption.map(_.version).getOrElse(0)
-      val phys = declared.flatMap { dc =>
-        skipIdentityAt(dir, entries, dc, head).map(_.eras.map(_._1)).getOrElse(Seq(dc))
-      }.distinct
-      writeBlooms(dir, ver, tag, computeBlooms(df, phys))
-    }
-    statsOf(dir, df)
-  }
+  private final case class CommitMeta(rows: Long,
+      stats: Seq[(Int, Long, Long)], statsM: Map[String, Seq[(Int, Long, Long)]])
 
-  /** Per-pid (min, max) of the stats column over `df` — the one extra
-    * bounded aggregation a stats-tracking write pays (a real format
-    * collects the same bounds from task-level file stats for free; one
-    * map-side-combined pass over bytes already in hand is the honest
-    * local equivalent). Empty when the layout tracks no stats column or
-    * `df` does not carry it (e.g. a pre-evolution segment). Pids whose
-    * values are all NULL emit no triple (unknown — never skipped on).
-    */
-  private def computeStats(df: DataFrame, statsCol: Option[String]): Seq[(Int, Long, Long)] =
-    statsCol.toSeq.flatMap { c =>
-      if (!df.columns.contains(c)) Nil
-      else df.groupBy(col("pid").cast("int").as("p"))
-        .agg(min(col(c).cast("long")).as("mn"), max(col(c).cast("long")).as("mx"))
-        .collect().toSeq
-        .filterNot(r => r.isNullAt(1) || r.isNullAt(2))
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    }
+  private val noMeta = CommitMeta(0L, Nil, Map.empty)
 
-  /** Multi-column [[computeStats]] (round 14): per-pid [min,max] for
-    * EVERY given physical column `df` carries at a numeric type, in
-    * ONE map-side-combined pass (the per-column bounds ride the same
-    * aggregation — a stats set of k columns does not cost k scans).
-    * Keys are the PHYSICAL column names in the bytes — exactly what a
-    * parquet footer records — and read-time identity resolution maps
-    * a query column back to each source's physical spelling, which is
-    * what lets skipping survive a rename.
+  /** The ONE metadata pass of a data commit over the rows it landed
+    * (read back under the writer's schema, or checkpointed in hand):
+    * one `groupBy(pid)` aggregate yields the row count, the pids
+    * (checked against [[pidDomain]] when `checkDomain`), per-pid
+    * [min, max] of each stats column, and the exact per-pid distinct
+    * count of each Bloom column, which sizes its bitsets (see
+    * [[bloomK]]); with Bloom columns, [[bloomWords]] then writes the
+    * sidecar. Columns are every era spelling of each declared identity
+    * that `landed` carries at a numeric (stats) or bloomable type — a
+    * segment written after a rename carries the new spelling, a minor
+    * compact's raw bytes the old. Pids whose values are all NULL emit
+    * no triple (unknown — never skipped on). Triples ascend by pid.
     */
-  private def computeStatsM(
-      df: DataFrame, physCols: Seq[String]): Map[String, Seq[(Int, Long, Long)]] = {
-    val present = physCols.distinct.filter(c => df.columns.contains(c)
-      && df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
-    if (present.isEmpty) return Map.empty
-    val aggs = present.flatMap(c => Seq(
-      min(col(c).cast("long")).as(s"__mn_$c"), max(col(c).cast("long")).as(s"__mx_$c")))
-    val rows = df.groupBy(col("pid").cast("int").as("p"))
+  private def commitMeta(dir: String, ver: Int, tag: String, landed: DataFrame,
+      checkDomain: Boolean = false): CommitMeta = {
+    val entries = log(dir)
+    val head = entries.lastOption.map(_.version).getOrElse(0)
+    def physOf(declared: Seq[String]): Seq[String] = declared.flatMap { dc =>
+      skipIdentityAt(dir, entries, dc, head).map(_.eras.map(_._1)).getOrElse(Seq(dc))
+    }.distinct
+    val statsCols = physOf(statsColsOf(dir)).filter(c => landed.columns.contains(c)
+      && landed.schema(c).dataType.isInstanceOf[NumericType])
+    val bloomTypes = physOf(bloomColsOf(dir))
+      .flatMap(c => resolveTypeOf(landed, c).filter(bloomableType).map(c -> _))
+    val aggs = count(lit(1)).as("__n") +: (statsCols.flatMap(c => Seq(
+      min(col(c).cast("long")).as(s"__mn_$c"), max(col(c).cast("long")).as(s"__mx_$c"))) ++
+      bloomTypes.map { case (c, _) => countDistinct(col(c)).as(s"__d_$c") })
+    val byPid = landed.groupBy(col("pid").cast("int").as("p"))
       .agg(aggs.head, aggs.tail: _*).collect().toSeq
-    present.map { c =>
+    if (checkDomain) {
+      val domain = pidDomain(entries)
+      val novel = byPid.filter(r => r.isNullAt(0) || !domain(r.getInt(0)))
+        .map(r => if (r.isNullAt(0)) "null" else r.getInt(0).toString).sorted
+      require(domain.isEmpty || novel.isEmpty,
+        s"insert introduces pids ${novel.mkString(",")} outside the base domain of $dir; " +
+          "segments must reuse v0's range partitions (recompute pid from the boundary array)")
+    }
+    val rows = byPid.filterNot(_.isNullAt(0)).sortBy(_.getInt(0))
+    if (bloomTypes.nonEmpty && rows.nonEmpty) {
+      val mOf = bloomTypes.map { case (c, _) =>
+        val maxD = rows.map(r => r.getLong(r.fieldIndex(s"__d_$c"))).max
+        var m = bloomMinBits
+        while (m < 16L * maxD && m < bloomMaxBits) m <<= 1
+        c -> m
+      }.toMap
+      writeBlooms(dir, ver, tag, bloomWords(landed, bloomTypes.toMap, mOf))
+    }
+    val statsM = statsCols.map { c =>
       c -> rows.flatMap { r =>
         val (mnI, mxI) = (r.fieldIndex(s"__mn_$c"), r.fieldIndex(s"__mx_$c"))
         if (r.isNullAt(mnI) || r.isNullAt(mxI)) None
         else Some((r.getInt(0), r.getLong(mnI), r.getLong(mxI)))
       }
     }.toMap.filter(_._2.nonEmpty)
+    CommitMeta(byPid.map(_.getLong(1)).sum,
+      statsColOf(dir).flatMap(statsM.get).getOrElse(Nil), statsM)
   }
 
-  /** Stats to record for a commit whose landed bytes are `df`:
-    * (legacy primary-column triples, full physical-name-keyed map).
-    * The physical names worth scanning are every era spelling of every
-    * DECLARED stats identity — a segment written after a rename
-    * carries the new spelling, a minor compact's raw bytes the old —
-    * and [[computeStatsM]] keeps whichever ones `df` actually has.
+  /** Write a commit's tombstone set to `path` and return its row count
+    * and touched pids, observed from the frame AS IT IS WRITTEN (one
+    * job; the dir is never read back). `single` lands one file — the
+    * bounded matched sets of delete/upsert/merge/restore.
     */
-  private def statsOf(dir: String,
-      df: DataFrame): (Seq[(Int, Long, Long)], Map[String, Seq[(Int, Long, Long)]]) = {
-    val declared = statsColsOf(dir)
-    if (declared.isEmpty) return (Nil, Map.empty)
-    val entries = log(dir)
-    val head = entries.lastOption.map(_.version).getOrElse(0)
-    val phys = declared.flatMap { dc =>
-      skipIdentityAt(dir, entries, dc, head).map(_.eras.map(_._1)).getOrElse(Seq(dc))
-    }.distinct
-    val m = computeStatsM(df, phys)
-    (statsColOf(dir).flatMap(m.get).getOrElse(Nil), m)
+  private def writeTombs(tombs: DataFrame, path: String,
+      single: Boolean = true): (Long, Seq[Int]) = {
+    val obs = org.apache.spark.sql.Observation()
+    val observed = tombs.observe(obs, count(lit(1)).as("n"), collect_set(col("pid")).as("p"))
+    (if (single) observed.coalesce(1) else observed).write.mode("overwrite").parquet(path)
+    val r = obs.get
+    (r("n").asInstanceOf[Long], r("p").asInstanceOf[Seq[Int]].sorted)
   }
 
   /** The live column identity a DECLARED stats column (its ORIGINAL
@@ -828,9 +832,10 @@ object VersionedLayout {
     * overwrite the winner's committed entry. Hard-link creation is the
     * atomic primitive that refuses an existing target
     * (`FileAlreadyExistsException`), which is exactly the
-    * compare-and-swap a table-format commit service performs.
+    * compare-and-swap a table-format commit service performs. Returns
+    * the entry as published (commit time stamped).
     */
-  private[graft] def commit(dir: String, e: LogEntry): Unit = {
+  private[graft] def commit(dir: String, e: LogEntry): LogEntry = {
     logDir(dir).mkdirs()
     // Checkpoint truncation deletes the per-version files it covers, so
     // the existence CAS below can no longer catch a writer re-using a
@@ -879,6 +884,7 @@ object VersionedLayout {
         // cause marks this as a version-CAS loss so withWriteRetry rebases it
         new java.nio.file.FileAlreadyExistsException(entryFile(dir, e.version).toString))
     }
+    stamped
   }
 
   /** Parsed-checkpoint cache: a checkpoint file is IMMUTABLE once
@@ -1213,25 +1219,28 @@ object VersionedLayout {
            else "")
         + s""","types":{$types}""" + "}")
         .getBytes(StandardCharsets.UTF_8))
-    // Stats come from reading BACK the written bytes (a pruned scan —
-    // cheaper than recomputing or caching the input), which also makes
-    // them bounds over exactly what landed.
-    val (stats, statsM) =
-      if ((allStats.isEmpty && bloomCols.isEmpty) || basePidDirs(dir).isEmpty)
-        (Nil, Map.empty[String, Seq[(Int, Long, Long)]])
-      else recordStats(dir, 0, "", s.read.option("basePath", dir)
-        .parquet(basePidDirs(dir).map(p => s"$dir/pid=$p"): _*))
-    // Commit-metadata row count (parquet footer metadata, no column
-    // bytes read) — what DESCRIBE HISTORY serves without a data pass.
-    val nBase =
-      if (basePidDirs(dir).isEmpty) 0L
-      else s.read.option("basePath", dir)
-        .parquet(basePidDirs(dir).map(p => s"$dir/pid=$p"): _*).count()
+    // Row count and stats come from reading BACK the written bytes
+    // under the writer's schema (a pruned scan — cheaper than
+    // recomputing or caching the input), which also makes them bounds
+    // over exactly what landed.
+    val pids = basePidDirs(dir)
+    val meta =
+      if (pids.isEmpty) noMeta
+      else commitMeta(dir, 0, "", landedPids(s, dir, pids, Some(df.schema)))
     // The v0 entry records the base pid DOMAIN — the closed set of
     // partitions every later segment must stay inside (see
     // [[appendInsert]]); AS-OF correctness below a fold depends on it.
-    commit(dir, LogEntry(0, "write", basePidDirs(dir), 0, stats = stats,
-      rowsW = nBase, rowsD = 0L, statsM = statsM))
+    commit(dir, LogEntry(0, "write", pids, 0, stats = meta.stats,
+      rowsW = meta.rows, rowsD = 0L, statsM = meta.statsM))
+  }
+
+  /** The live pid dirs `pids` as one frame (pid a partition column),
+    * under the writer's `schema` when known — no footer inference.
+    */
+  private def landedPids(s: SparkSession, dir: String, pids: Seq[Int],
+      schema: Option[StructType]): DataFrame = {
+    val rd = s.read.option("basePath", dir)
+    schema.map(rd.schema).getOrElse(rd).parquet(pids.map(p => s"$dir/pid=$p"): _*)
   }
 
   private def basePidDirs(dir: String): Seq[Int] =
@@ -1241,6 +1250,10 @@ object VersionedLayout {
 
   /** The closed pid domain committed at v0 (empty set = legacy layout
     * written before the domain was recorded; validation is skipped).
+    * Segments must stay inside it: a pid only segments introduced has
+    * no pre-fold base state, so once a major fold lands it live, AS-OF
+    * below the fold could not tell "absent at v" from "never
+    * rewritten" and would serve post-fold bytes.
     */
   private def pidDomain(entries: Seq[LogEntry]): Set[Int] =
     // The CURRENT scheme's closed pid set: the last scheme-changing
@@ -1250,14 +1263,6 @@ object VersionedLayout {
       .map(_.colType.split(",").map(_.trim.toInt).toSet)
       .getOrElse(entries.find(_.version == 0).map(_.pids.toSet).getOrElse(Set.empty))
 
-  /** Reject segment rows whose pid falls outside the base domain. A
-    * pid that exists ONLY because segments introduced it has no
-    * pre-fold base state, so after a major fold lands it live there is
-    * no archive distinguishing "pid did not exist at v" from "pid was
-    * never rewritten" — AS-OF below the fold would serve post-fold
-    * bytes. Closing the domain at v0 makes that state unreachable.
-    * Cost: one distinct over the (bounded) segment pid column.
-    */
   /** The version at which `name` LAST VACATED the schema (dropped, or
     * renamed away), or None when the name is live or evolution never
     * touched it: the last liveness-affecting event wins — add and
@@ -1273,28 +1278,21 @@ object VersionedLayout {
     evs.sortBy(_._1).lastOption.collect { case (ver, false) => ver }
   }
 
-  private def requireInDomain(dir: String, rows: DataFrame): Unit = {
+  /** A name currently RENAMED AWAY cannot ride a new segment: writers
+    * must use head-era names, or version-gated era resolution would
+    * have no version range to assign the stale-named values to (a name
+    * a later addColumn RE-ADDED is live again and rides normally). The
+    * other admission rule — every segment pid inside the closed domain
+    * — rides the metadata pass ([[commitMeta]]'s `checkDomain`).
+    */
+  private def requireHeadNames(dir: String, rows: DataFrame): Unit = {
     val entries = log(dir)
-    // A name currently RENAMED AWAY cannot ride a new segment: writers
-    // must use head-era names, or version-gated era resolution would
-    // have no version range to assign the stale-named values to. A name
-    // a later addColumn RE-ADDED is live again and rides segments
-    // normally (the read path separates the incarnations by source
-    // version). Fail the stale writer loudly instead.
     val stale = entries.filter(_.action == "renamecolumn").map(_.colName).distinct
       .filter(rows.columns.contains)
       .filter(n => lastVacatedAt(entries, n).isDefined)
     require(stale.isEmpty,
       s"insert carries renamed-away column(s) ${stale.mkString(",")} of $dir — " +
         "write under the current name(s)")
-    val domain = pidDomain(entries)
-    if (domain.nonEmpty) {
-      val novel = rows.select(col("pid").cast("int").as("pid")).distinct()
-        .collect().map(_.getInt(0)).filterNot(domain).sorted
-      require(novel.isEmpty,
-        s"insert introduces pids ${novel.mkString(",")} outside the base domain of $dir; " +
-          "segments must reuse v0's range partitions (recompute pid from the boundary array)")
-    }
   }
 
   /** DELETE as version `currentVersion + 1`: materialize the matching
@@ -1307,16 +1305,20 @@ object VersionedLayout {
       txn: Long = -1L): Int = {
     val ver = currentVersion(dir) + 1
     val tag = writerTag()
-    readAsOf(s, dir, ver - 1).where(cond)
+    val tombs = readAsOf(s, dir, ver - 1).where(cond)
       .select(col("pid").cast("int").as("pid") +: keyColsOf(dir).map(col): _*)
-      .coalesce(1).write.mode("overwrite").parquet(tombDir(dir, ver, tag))
-    // One aggregate serves both the row count and the touched-pid set
-    // (same single job the count alone used to run).
-    val t = s.read.parquet(tombDir(dir, ver, tag))
-      .agg(count(lit(1)), collect_set(col("pid"))).first()
-    commit(dir, LogEntry(ver, "delete", Nil, 0, txn, tag,
-      rowsW = 0L, rowsD = t.getLong(0),
-      tpids = t.getSeq[Int](1).sorted))
+    commitDelete(s, dir, ver, tag, tombs, txn)
+  }
+
+  /** The shared tail of both delete verbs: write the tombstone set,
+    * commit its observed mass and touched pids, seed its relation.
+    */
+  private def commitDelete(s: SparkSession, dir: String, ver: Int, tag: String,
+      tombs: DataFrame, txn: Long): Int = {
+    val (rowsD, tpids) = writeTombs(tombs, tombDir(dir, ver, tag))
+    val e = commit(dir, LogEntry(ver, "delete", Nil, 0, txn, tag,
+      rowsW = 0L, rowsD = rowsD, tpids = tpids))
+    seedArtifacts(s, dir, e, None, Some(tombs.schema))
     ver
   }
 
@@ -1334,16 +1336,10 @@ object VersionedLayout {
     val ver = currentVersion(dir) + 1
     val tag = writerTag()
     val keyCols = keyColsOf(dir)
-    readAsOf(s, dir, ver - 1)
+    val tombs = readAsOf(s, dir, ver - 1)
       .join(keys.select(keyCols.map(col): _*), keyCols, "left_semi")
       .select(col("pid").cast("int").as("pid") +: keyCols.map(col): _*)
-      .coalesce(1).write.mode("overwrite").parquet(tombDir(dir, ver, tag))
-    val t = s.read.parquet(tombDir(dir, ver, tag))
-      .agg(count(lit(1)), collect_set(col("pid"))).first()
-    commit(dir, LogEntry(ver, "delete", Nil, 0, txn, tag,
-      rowsW = 0L, rowsD = t.getLong(0),
-      tpids = t.getSeq[Int](1).sorted))
-    ver
+    commitDelete(s, dir, ver, tag, tombs, txn)
   }
 
   /** Exactly-once [[appendDeleteKeys]] (the [[appendInsertOnce]] stamp
@@ -1377,13 +1373,19 @@ object VersionedLayout {
   def appendInsert(s: SparkSession, dir: String, rows: DataFrame, txn: Long = -1L): Int = {
     val ver = currentVersion(dir) + 1
     val tag = writerTag()
-    requireInDomain(dir, rows)
-    rows.write.mode("overwrite").parquet(insertDir(dir, ver, tag))
-    val seg = s.read.parquet(insertDir(dir, ver, tag))
-    val (st, stM) = recordStats(dir, ver, tag, seg)
-    commit(dir, LogEntry(ver, "insert", Nil, 0, txn, tag,
-      stats = st, statsM = stM,
-      rowsW = seg.count(), rowsD = 0L))
+    requireHeadNames(dir, rows)
+    val path = insertDir(dir, ver, tag)
+    rows.write.mode("overwrite").parquet(path)
+    // A pid outside the domain fails the metadata pass over the landed
+    // bytes; the never-committed segment leaves with it.
+    val meta = try commitMeta(dir, ver, tag, s.read.schema(rows.schema).parquet(path),
+      checkDomain = true)
+    catch { case ex: IllegalArgumentException =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path)); throw ex }
+    val e = commit(dir, LogEntry(ver, "insert", Nil, 0, txn, tag,
+      stats = meta.stats, statsM = meta.statsM,
+      rowsW = meta.rows, rowsD = 0L))
+    seedArtifacts(s, dir, e, Some(rows.schema), None)
     ver
   }
 
@@ -1877,22 +1879,27 @@ object VersionedLayout {
     }
     val ver = currentVersion(dir) + 1
     val tag = writerTag()
-    val current = readAsOf(s, dir, ver - 1)
-    current
-      .select(col("pid").cast("int").as("pid") +: keyColsOf(dir).map(col): _*)
-      .write.mode("overwrite").parquet(tombDir(dir, ver, tag))
     val newRows = rows.localCheckpoint()
-    requireInDomain(dir, newRows)
+    requireHeadNames(dir, newRows)
+    val tombs = readAsOf(s, dir, ver - 1)
+      .select(col("pid").cast("int").as("pid") +: keyColsOf(dir).map(col): _*)
+    commitUpsert(s, dir, ver, tag, tombs, newRows, txn, single = false)
+  }
+
+  /** The shared tail of the upsert-shaped verbs (upsert, replace,
+    * merge): admit the checkpointed `newRows` through the metadata pass
+    * (domain check and skip metadata) BEFORE anything lands, write the
+    * tombstone set and the segment, commit, seed both relations.
+    */
+  private def commitUpsert(s: SparkSession, dir: String, ver: Int, tag: String,
+      tombs: DataFrame, newRows: DataFrame, txn: Long, single: Boolean = true): Int = {
+    val meta = commitMeta(dir, ver, tag, newRows, checkDomain = true)
+    val (rowsD, tpids) = writeTombs(tombs, tombDir(dir, ver, tag), single)
     newRows.write.mode("overwrite").parquet(insertDir(dir, ver, tag))
-    val (st, stM) = recordStats(dir, ver, tag, newRows)
-    locally {
-      val t = s.read.parquet(tombDir(dir, ver, tag))
-        .agg(count(lit(1)), collect_set(col("pid"))).first()
-      commit(dir, LogEntry(ver, "upsert", Nil, 0, txn, tag,
-        stats = st, statsM = stM,
-        rowsW = newRows.count(), rowsD = t.getLong(0),
-        tpids = t.getSeq[Int](1).sorted))
-    }
+    val e = commit(dir, LogEntry(ver, "upsert", Nil, 0, txn, tag,
+      stats = meta.stats, statsM = meta.statsM,
+      rowsW = meta.rows, rowsD = rowsD, tpids = tpids))
+    seedArtifacts(s, dir, e, Some(newRows.schema), Some(tombs.schema))
     ver
   }
 
@@ -1911,21 +1918,11 @@ object VersionedLayout {
     val ver = currentVersion(dir) + 1
     val tag = writerTag()
     val matched = readAsOf(s, dir, ver - 1).where(cond).localCheckpoint()
-    matched
-      .select(col("pid").cast("int").as("pid") +: keyColsOf(dir).map(col): _*)
-      .coalesce(1).write.mode("overwrite").parquet(tombDir(dir, ver, tag))
     val replacements = transform(matched).localCheckpoint()
-    requireInDomain(dir, replacements)
-    replacements.write.mode("overwrite").parquet(insertDir(dir, ver, tag))
-    val (st, stM) = recordStats(dir, ver, tag, replacements)
-    // Count + touched-pid set in the one aggregate the count was
-    // (matched is checkpointed — this re-reads no base data).
-    val t = matched.agg(count(lit(1)), collect_set(col("pid").cast("int"))).first()
-    commit(dir, LogEntry(ver, "upsert", Nil, 0, tag = tag,
-      stats = st, statsM = stM,
-      rowsW = replacements.count(), rowsD = t.getLong(0),
-      tpids = t.getSeq[Int](1).sorted))
-    ver
+    requireHeadNames(dir, replacements)
+    commitUpsert(s, dir, ver, tag,
+      matched.select(col("pid").cast("int").as("pid") +: keyColsOf(dir).map(col): _*),
+      replacements, txn = -1L)
   }
 
   /** MERGE INTO — the full three-arm Delta-shaped merge as ONE
@@ -2058,10 +2055,9 @@ object VersionedLayout {
         !coalesce(bySourceDeleteCond.getOrElse(falseC), falseC)))
     // Tombstones: pre-images of EVERY mutating arm; untouched matches
     // (and untouched target-only rows) stay out — no event, no rewrite.
-    (Seq(delPart, updPart) ++ bsDelPart ++ bsUpdPart)
+    val tombs = (Seq(delPart, updPart) ++ bsDelPart ++ bsUpdPart)
       .map(_.select(col("pid").cast("int").as("pid") +: keyCols.map(col): _*))
       .reduce(_ unionByName _)
-      .coalesce(1).write.mode("overwrite").parquet(tombDir(dir, ver, tag))
     val updated = updPart.select(headCols.map(c =>
       updateSet.getOrElse(c, col(c)).as(c)): _*)
     val bsUpdated = bsUpdPart.map(_.select(headCols.map(c =>
@@ -2100,18 +2096,8 @@ object VersionedLayout {
       }
     val newRows = (Seq(updated, inserted) ++ bsUpdated)
       .reduce(_ unionByName _).localCheckpoint()
-    requireInDomain(dir, newRows)
-    newRows.write.mode("overwrite").parquet(insertDir(dir, ver, tag))
-    val (st, stM) = recordStats(dir, ver, tag, newRows)
-    locally {
-      val t = s.read.parquet(tombDir(dir, ver, tag))
-        .agg(count(lit(1)), collect_set(col("pid"))).first()
-      commit(dir, LogEntry(ver, "upsert", Nil, 0, txn, tag,
-        stats = st, statsM = stM,
-        rowsW = newRows.count(), rowsD = t.getLong(0),
-        tpids = t.getSeq[Int](1).sorted))
-    }
-    ver
+    requireHeadNames(dir, newRows)
+    commitUpsert(s, dir, ver, tag, tombs, newRows, txn)
   }
 
   /** Exactly-once [[appendMerge]] (the [[appendInsertOnce]] stamp
@@ -2219,9 +2205,9 @@ object VersionedLayout {
     // would single-task this write — at that scale shard the key set
     // like the delete path instead (documented contract, not a latent
     // scale bug: the restore's whole design is O(changed keys)).
-    feed.select(col("pid").cast("int").as("pid") +: key.map(col): _*)
+    val tombs = feed.select(col("pid").cast("int").as("pid") +: key.map(col): _*)
       .distinct()
-      .coalesce(1).write.mode("overwrite").parquet(tombDir(dir, ver, tag))
+    val (rowsD, tpids) = writeTombs(tombs, tombDir(dir, ver, tag))
     val earliest = feed.groupBy((col("pid") +: key.map(col)): _*)
       .agg(min(col("change_version")).as("_ev"))
     // Keep each part's commit version (`_cv`) through the pre-image
@@ -2314,19 +2300,17 @@ object VersionedLayout {
         col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
-    projected.write.mode("overwrite").parquet(insertDir(dir, ver, tag))
-    val seg = s.read.parquet(insertDir(dir, ver, tag))
-    val (rSt, rStM) = recordStats(dir, ver, tag, seg)
-    val tAgg = s.read.parquet(tombDir(dir, ver, tag))
-      .agg(count(lit(1)), collect_set(col("pid"))).first()
-    commit(dir, LogEntry(ver, "upsert", Nil, horizon = toVersion, txn = txn, tag = tag,
-      stats = rSt, statsM = rStM,
-      tpids = tAgg.getSeq[Int](1).sorted,
-      rowsW = seg.count(), rowsD = tAgg.getLong(0),
+    val path = insertDir(dir, ver, tag)
+    projected.write.mode("overwrite").parquet(path)
+    val meta = commitMeta(dir, ver, tag, s.read.schema(projected.schema).parquet(path))
+    val e = commit(dir, LogEntry(ver, "upsert", Nil, horizon = toVersion, txn = txn, tag = tag,
+      stats = meta.stats, statsM = meta.statsM, tpids = tpids,
+      rowsW = meta.rows, rowsD = rowsD,
       // Unambiguous provenance: horizon = 0 made a legal restore TO
       // VERSION 0 indistinguishable from a plain upsert (round-13
       // advisor) — the dedicated field has no zero blind spot.
       restoreOf = toVersion))
+    seedArtifacts(s, dir, e, Some(projected.schema), Some(tombs.schema))
     ver
   }
 
@@ -2440,15 +2424,23 @@ object VersionedLayout {
     // whose rows all died lands an empty dir and emits no triple
     // (unknown — never skipped on, and the source listing is empty
     // anyway).
-    val landed = pids.filter(p => new java.io.File(s"$dir/pid=$p").isDirectory)
-    val (postStats, postStatsM) =
-      if ((statsColsOf(dir).isEmpty && bloomColsOf(dir).isEmpty) || landed.isEmpty)
-        (Nil, Map.empty[String, Seq[(Int, Long, Long)]])
-      else recordStats(dir, ver, "", s.read.option("basePath", dir)
-        .parquet(landed.map(p => s"$dir/pid=$p"): _*))
+    val meta = skipMeta(s, dir, ver, pids, None)
     commit(dir, LogEntry(ver, "compact", pids, 0,
-      stats = postStats, statsM = postStatsM))
+      stats = meta.stats, statsM = meta.statsM))
     (ver, pids)
+  }
+
+  /** Skip metadata of a compaction's landed pid dirs (those of `pids`
+    * the rewrite left a live dir for): the [[commitMeta]] pass, run only
+    * when the layout declares stats or Bloom columns — a compaction
+    * records no row masses.
+    */
+  private def skipMeta(s: SparkSession, dir: String, ver: Int, pids: Seq[Int],
+      schema: Option[StructType]): CommitMeta = {
+    val landed = pids.filter(p => new java.io.File(s"$dir/pid=$p").isDirectory)
+    if ((statsColsOf(dir).isEmpty && bloomColsOf(dir).isEmpty) || landed.isEmpty)
+      noMeta
+    else commitMeta(dir, ver, "", landedPids(s, dir, landed, schema))
   }
 
   /** MAJOR compaction as version `currentVersion + 1`: fold the insert
@@ -2497,8 +2489,8 @@ object VersionedLayout {
     * exactly as committed; the fold's output lands under the NEW pids;
     * skipping stats and Bloom sidecars are re-recorded per the new
     * scheme by the fold's own stats pass; and from this version on
-    * [[requireInDomain]] checks inserts against `newDomain` (the commit
-    * carries it — see [[pidDomain]]). Logical answers are untouched:
+    * [[commitMeta]]'s domain check admits inserts against `newDomain`
+    * (the commit carries it — see [[pidDomain]]). Logical answers are untouched:
     * pid is placement, never identity, and tombstone masking joins on
     * (pid, keys) consistently on each side of the fold because rows and
     * their tombstones are re-keyed together (tombstones at-or-below the
@@ -2522,8 +2514,9 @@ object VersionedLayout {
     val tmpBase = s"$dir/.major-tmp"
     val arch = archiveDir(dir, ver)
     // 1. The folded head snapshot, written completely before any move
-    //    (a crashed attempt's complete tmp is reused as-is).
-    if (!new java.io.File(s"$tmpBase/_SUCCESS").isFile) {
+    //    (a crashed attempt's complete tmp is reused as-is; its schema
+    //    is then unknown here and the stats pass infers it).
+    val written = if (new java.io.File(s"$tmpBase/_SUCCESS").isFile) None else {
       val snapshot0 = readAsOf(s, dir, ver - 1)
       // Scheme change: recompute placement BEFORE the fold write; the
       // new pid must land inside the declared domain — validated on the
@@ -2561,6 +2554,7 @@ object VersionedLayout {
           .repartitionByRange(parts, (col("pid") +: clusterBy): _*)
           .sortWithinPartitions((col("pid") +: clusterBy): _*)
       shaped.write.mode("overwrite").partitionBy("pid").parquet(tmpBase)
+      Some(shaped.schema)
     }
     def pidDirs(root: String): Seq[String] =
       Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
@@ -2594,12 +2588,7 @@ object VersionedLayout {
     // Stats over the folded output's live pid dirs (the fold's entry
     // covers every pre-fold pid for archive routing; a pid the fold
     // left no live dir for emits no triple).
-    val landed = pids.filter(p => new java.io.File(s"$dir/pid=$p").isDirectory)
-    val (postStats, postStatsM) =
-      if ((statsColsOf(dir).isEmpty && bloomColsOf(dir).isEmpty) || landed.isEmpty)
-        (Nil, Map.empty[String, Seq[(Int, Long, Long)]])
-      else recordStats(dir, ver, "", s.read.option("basePath", dir)
-        .parquet(landed.map(p => s"$dir/pid=$p"): _*))
+    val meta = skipMeta(s, dir, ver, pids, written)
     // A scheme-changing fold records its marker and the DECLARED new
     // domain on the entry itself (colName/colType are free on
     // maintenance commits — evolution scans key on action), so the
@@ -2608,7 +2597,7 @@ object VersionedLayout {
     commit(dir, LogEntry(ver, "majorcompact", pids, 0,
       colName = if (newPid.isDefined) "repartition" else "",
       colType = if (newPid.isDefined) newDomain.mkString(",") else "",
-      stats = postStats, statsM = postStatsM))
+      stats = meta.stats, statsM = meta.statsM))
     (ver, pids)
   }
 
@@ -2906,7 +2895,7 @@ object VersionedLayout {
   /** The tombstone set one version committed (spec observability). */
   def tombstonesAt(s: SparkSession, dir: String, ver: Int): DataFrame = {
     val entries = log(dir)
-    cachedParquet(s, logStamp(entries), None, Seq(tombDirOf(dir, entries, ver)))
+    tombRel(s, dir, entries, entryAt(dir, entries, ver))
   }
 
   /** The insert segment one version committed (incremental consumers) —
@@ -2916,8 +2905,12 @@ object VersionedLayout {
     */
   def insertsAt(s: SparkSession, dir: String, ver: Int): DataFrame = {
     val entries = log(dir)
-    cachedParquet(s, logStamp(entries), None, Seq(locateSegment(dir, entries, ver)))
+    segmentRel(s, dir, entries, entryAt(dir, entries, ver))
   }
+
+  private def entryAt(dir: String, entries: Seq[LogEntry], ver: Int): LogEntry =
+    entries.find(_.version == ver).getOrElse(throw new IllegalArgumentException(
+      s"version $ver is not in the log of $dir"))
 
   /** CHANGE DATA FEED: the row-level changes committed in versions
     * (fromV, toV] — each insert-segment row tagged `insert`, each
@@ -3014,7 +3007,7 @@ object VersionedLayout {
       forceTag: Boolean): DataFrame =
     // Same snapshot-cache discipline as readAsOf: the feed plan is
     // deterministic from (dir, window, committed log).
-    cachedPlan(s, s"feed|$dir|$fromV|$toV|$forceTag|${logStamp(log(dir))}") {
+    SnapshotCache.plan(s, s"feed|$dir|$fromV|$toV|$forceTag|${logStamp(log(dir))}") {
       buildChangeFeed(s, dir, fromV, toV, forceTag)
     }
 
@@ -3103,9 +3096,6 @@ object VersionedLayout {
     entries.filter(e => e.action == "majorcompact" && e.version <= v)
       .map(_.version).maxOption.getOrElse(0)
 
-  /** Tombstone versions in (after, v], each row stamped with the
-    * version that committed it (`_tomb_ver`). Empty frame when none.
-    */
   /** Tombstones in (after, v] stamped with their committing version —
     * `None` when the range holds no delete/upsert, so callers skip the
     * mask join entirely (an insert-only or freshly folded history pays
@@ -3114,15 +3104,11 @@ object VersionedLayout {
   private def tombstonesIn(
       s: SparkSession, dir: String, after: Int, v: Int): Option[DataFrame] = {
     val entries = log(dir)
-    val vers = entries
+    entries
       .filter(e => (e.action == "delete" || e.action == "upsert")
         && e.version > after && e.version <= v)
-      .map(_.version)
-    val stamp = logStamp(entries)
-    vers.map { tv =>
-      cachedParquet(s, stamp, None, Seq(tombDirOf(dir, entries, tv)))
-        .withColumn("_tomb_ver", lit(tv))
-    }.reduceOption(_ unionByName _)
+      .map(e => tombRel(s, dir, entries, e).withColumn("_tomb_ver", lit(e.version)))
+      .reduceOption(_ unionByName _)
   }
 
   /** The table AS OF version `v`: per-pid base-source selection (live
@@ -3639,7 +3625,7 @@ object VersionedLayout {
     // plain as-of shape is keyed). The composed plan is deterministic
     // from (dir, v, committed log), so the log stamp fully keys it.
     if (skip.isEmpty)
-      cachedPlan(s, s"asof|$dir|$v|${logStamp(log(dir))}") {
+      SnapshotCache.plan(s, s"asof|$dir|$v|${logStamp(log(dir))}") {
         buildAsOf(s, dir, v, None)
       }
     else buildAsOf(s, dir, v, skip)
@@ -3700,7 +3686,7 @@ object VersionedLayout {
     // only if no major fold separates it from v: a fold archives EVERY
     // pre-fold pid (all land in `archived`), so a live dir a later
     // fold's entry does not cover was introduced after v and must not
-    // leak into the base read (see [[requireInDomain]] — this guard is
+    // leak into the base read (see [[requireHeadNames]] — this guard is
     // the read-side backstop for legacy layouts without the v0 domain).
     val firstMajorAfter = entries
       .filter(e => e.action == "majorcompact" && e.version > v)
@@ -3715,9 +3701,8 @@ object VersionedLayout {
       if (skip.isDefined) keepByPid(entries, Int.MaxValue, keepOf)
       else Map.empty[Int, Option[Boolean]]
     val livePids = livePidsAll.filter(p => hits(liveStats.getOrElse(p, None)))
-    val stamp = logStamp(entries)
     def liveRead(ps: Seq[Int]) = aliasConflicted(
-      cachedParquet(s, stamp, Some(dir), ps.map(p => s"$dir/pid=$p")),
+      SnapshotCache.parquet(s, liveStamp(entries), Some(dir), ps.map(p => s"$dir/pid=$p")),
       lastSchemaWriterBefore(entries, Int.MaxValue))
     val liveDf = if (livePids.isEmpty) None else Some(liveRead(livePids))
     // ONE read per archive generation (multi-path), not one per pid —
@@ -3730,7 +3715,7 @@ object VersionedLayout {
       c -> ps.map(_._1).filter(p => hits(aStats.getOrElse(p, None)))
     }.filter(_._2.nonEmpty)
     def archRead(c: Int, ps: Seq[Int]) = aliasConflicted(
-      cachedParquet(s, stamp, Some(archiveDir(dir, c)),
+      SnapshotCache.parquet(s, entryStamp(entryAt(dir, entries, c)), Some(archiveDir(dir, c)),
         ps.map(p => s"${archiveDir(dir, c)}/pid=$p")),
       lastSchemaWriterBefore(entries, c))
     val archDf0 = archGroups.map { case (c, ps) => archRead(c, ps) }
@@ -3800,9 +3785,7 @@ object VersionedLayout {
         val k = keepOf(e)
         k.isEmpty || k.values.exists(identity)
       }
-      .map(e => aliasConflicted(
-        cachedParquet(s, stamp, None, Seq(locateSegment(dir, entries, e.version))),
-        e.version)
+      .map(e => aliasConflicted(segmentRel(s, dir, entries, e), e.version)
         .withColumn("_src_ver", lit(e.version)))
     // Sources may differ in schema across an addColumn evolution:
     // null-fill the union, then project to the schema COMMITTED AS OF v

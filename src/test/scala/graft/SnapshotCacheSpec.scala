@@ -78,6 +78,93 @@ class SnapshotCacheSpec extends SparkSpec {
     // checkpoint is metadata-only but must not change answers
     VersionedLayout.checkpoint(dir)
     assert(liveKeys == (1L to 8L).toSet + 100L, "stale read after checkpoint")
+    def vOf(k: Long) = VersionedLayout.readAsOf(s, dir, head).where(col("k") === k)
+      .select("v").first().getLong(0)
+    // merge: updates k=2, inserts k=200
+    VersionedLayout.appendMerge(s, dir, rows(Seq(2L, 200L)).withColumn("v", col("v") + 5),
+      Map("v" -> col("s_v")))
+    assert(liveKeys == (1L to 8L).toSet + 100L + 200L && vOf(2L) == 25L,
+      "stale read after merge")
+    // majorCompact: every live pid dir moves to the fold's archive
+    val (fold, _) = VersionedLayout.majorCompact(s, dir)
+    assert(liveKeys == (1L to 8L).toSet + 100L + 200L && vOf(2L) == 25L,
+      "stale read after majorCompact")
+    assert(VersionedLayout.readAsOf(s, dir, fold - 1).count() == 10L,
+      "stale as-of read below the fold")
+    // vacuum: its GC rewrites the tombstone dirs below the horizon in
+    // place, so a relation resolved before it must not be served after.
+    val tombsBefore = VersionedLayout.tombstonesAt(s, dir, 2).count()
+    VersionedLayout.vacuum(s, dir, fold)
+    assert(VersionedLayout.tombstonesAt(s, dir, 2).count() < tombsBefore,
+      "tombstone set read stale after vacuum's GC")
+    assert(liveKeys == (1L to 8L).toSet + 100L + 200L, "stale read after vacuum")
+    intercept[IllegalArgumentException](VersionedLayout.readAsOf(s, dir, fold - 1))
+    // replace
+    VersionedLayout.appendReplace(s, dir, rows(Seq(300L, 301L)))
+    assert(liveKeys == Set(300L, 301L), "stale read after replace")
+    // schema evolution
+    VersionedLayout.addColumn(s, dir, "w", "bigint")
+    VersionedLayout.appendInsert(s, dir, rows(Seq(302L)).withColumn("w", lit(7L)))
+    assert(VersionedLayout.readAsOf(s, dir, head).where(col("k") === 302L)
+      .select("w").first().getLong(0) == 7L, "stale read after addColumn")
+    VersionedLayout.renameColumn(s, dir, "v", "v2")
+    val renamed = VersionedLayout.readAsOf(s, dir, head)
+    assert(renamed.columns.contains("v2") && !renamed.columns.contains("v")
+      && renamed.where(col("k") === 300L).select("v2").first().getLong(0) == 3000L,
+      "stale read after renameColumn")
+    VersionedLayout.dropColumn(s, dir, "w")
+    assert(!VersionedLayout.readAsOf(s, dir, head).columns.contains("w"),
+      "stale read after dropColumn")
+    assert(liveKeys == Set(300L, 301L, 302L), "stale keys after evolution")
+  }
+
+  test("layout: after an appendInsert, building readAsOf(head) resolves no source again") {
+    val s = spark
+    val dir = java.nio.file.Files.createTempDirectory("graft-cachespec-jobs").toString + "/t"
+    def rows(ids: Seq[Long]) = {
+      val s0 = s; import s0.implicits._
+      ids.map(i => (((i % 4) + 1).toInt, i, i * 10)).toDF("pid", "k", "v")
+    }
+    // Jobs this thread starts while `body` runs (a job group keeps
+    // other threads' jobs out of the count).
+    def jobsDuring(body: => Unit): Int = {
+      val group = s"cachespec-${java.util.UUID.randomUUID()}"
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group)
+            n.incrementAndGet()
+      }
+      s.sparkContext.addSparkListener(l)
+      s.sparkContext.setJobGroup(group, "jobs probe")
+      try body finally {
+        s.sparkContext.clearJobGroup()
+        // Listener events are delivered asynchronously.
+        Thread.sleep(500)
+        s.sparkContext.removeSparkListener(l)
+      }
+      n.get()
+    }
+    // Sources at the head: the live pid dirs, one tombstone set, two
+    // insert segments.
+    VersionedLayout.writeBaseTable(s, rows(1L to 40L), dir, Seq("k"))
+    VersionedLayout.appendInsert(s, dir, rows(Seq(100L, 101L)))
+    VersionedLayout.appendDelete(s, dir, col("k") === 3L)
+    VersionedLayout.readAsOf(s, dir, VersionedLayout.currentVersion(dir)).count()
+    val insertJobs = jobsDuring(VersionedLayout.appendInsert(s, dir, rows(Seq(102L))))
+    val head = VersionedLayout.currentVersion(dir)
+    val buildJobs = jobsDuring(VersionedLayout.readAsOf(s, dir, head))
+    assert(buildJobs == 0, s"readAsOf(head) after an insert started $buildJobs jobs")
+    // The insert resolved only its own segment: its write and its one
+    // metadata aggregate (two stages), not one inference job per source.
+    assert(insertJobs <= 3, s"appendInsert started $insertJobs jobs")
+    assert(VersionedLayout.readAsOf(s, dir, head).count() == 42L)
+    // Control: the same sources under a new path resolve cold, one
+    // inference job per source relation.
+    val clone = java.nio.file.Files.createTempDirectory("graft-cachespec-jobs").toString + "/c"
+    VersionedLayout.cloneAsOf(s, dir, clone, head)
+    val coldJobs = jobsDuring(VersionedLayout.readAsOf(s, clone, head))
+    assert(coldJobs >= 4, s"a cold build of 4 sources started only $coldJobs jobs")
   }
 
   test("LSH chain: admit, retract, compact each invalidate the cached chain read") {
